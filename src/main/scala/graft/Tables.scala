@@ -48,8 +48,8 @@ object Tables {
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
-  // Resolved-read memo (VERDICT r16 #6, guide §6 file-listing cache):
-  // every `spark.read.parquet(path)` builds a fresh InMemoryFileIndex
+  // Resolved-read memo (guide §6 file-listing cache): every
+  // `spark.read.parquet(path)` builds a fresh InMemoryFileIndex
   // (directory listing) and re-reads the footer for schema inference —
   // pure driver-side metadata work repeated for every t() call (each
   // bench rep, each serve-latency batch, each verify query). Memoize the
@@ -57,38 +57,47 @@ object Tables {
   // are pinned once per session, while every action on it still reads
   // the parquet BYTES from disk (a DataFrame holds no row data — this is
   // metadata caching, not result caching; Spark itself does the same for
-  // catalog tables via filesourcePartitionFileCacheSize). Entries die
-  // with their session (onApplicationEnd), so tests that cycle many
-  // sessions don't accumulate plans against stopped contexts.
-  private val readMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  // catalog tables via filesourcePartitionFileCacheSize).
+  //
+  // Keyed by the session object itself, not by its application: sessions
+  // from `newSession()` share one SparkContext but not their SQL conf, and
+  // a memoized frame plans under the conf of the session that read it.
+  // Contract: a table path is immutable within a session — rewriting the
+  // files under a path a session already read serves that session the
+  // stale listing. A session's entries are evicted when its context ends
+  // (onApplicationEnd), so tests that cycle many sessions don't
+  // accumulate plans against stopped contexts.
+  private val readMemo = new java.util.concurrent.ConcurrentHashMap[
+    SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
   private val hookedApps =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     tune(spark)
-    val app = spark.sparkContext.applicationId
+    val sc = spark.sparkContext
+    val app = sc.applicationId
     if (hookedApps.add(app)) {
-      spark.sparkContext.addSparkListener(
+      sc.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
           override def onApplicationEnd(
               end: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
-            readMemo.keySet.removeIf(_.startsWith(app + " "))
+            readMemo.keySet.removeIf(_.sparkContext eq sc)
             hookedApps.remove(app)
           }
         })
     }
-    readMemo.computeIfAbsent(s"$app $dir/$name.parquet", _ => {
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      // Restore nanos-as-long timestamp columns to TimestampType (micros —
-      // Spark's max precision; floor truncation matches the oracle's
-      // epoch_ms//1000 semantics at second granularity).
-      df.schema.fields.foldLeft(df) {
-        case (acc, f) if f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType =>
-          acc.withColumn("ts", timestamp_micros((col("ts") / lit(1000L)).cast("long")))
-        case (acc, _) => acc
-      }
-    })
+    readMemo.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap())
+      .computeIfAbsent(s"$dir/$name.parquet", _ => {
+        val df = spark.read.parquet(s"$dir/$name.parquet")
+        // Restore nanos-as-long timestamp columns to TimestampType (micros —
+        // Spark's max precision; floor truncation matches the oracle's
+        // epoch_ms//1000 semantics at second granularity).
+        df.schema.fields.foldLeft(df) {
+          case (acc, f) if f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType =>
+            acc.withColumn("ts", timestamp_micros((col("ts") / lit(1000L)).cast("long")))
+          case (acc, _) => acc
+        }
+      })
   }
 
   /** Epoch seconds (floor) of a timestamp column; works for both TIMESTAMP

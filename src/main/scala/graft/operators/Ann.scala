@@ -122,23 +122,6 @@ object Ann {
     require(hops >= 1, s"bad hops $hops")
     require(expandHops >= 1 && expandHops <= 3, s"bad expandHops $expandHops")
     val m = books.size
-    val useReliable =
-      corpus.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (!cutLineage) df
-      else if (useReliable) df.checkpoint() else df.localCheckpoint()
-    // lazy cut + count in one job; the count doubles as the all-miss
-    // guard (same barrier diet as [[walkBeam]] — guide §2.4)
-    def cutCounted(df: DataFrame): (DataFrame, Long) =
-      if (!cutLineage) (df, -1L)
-      else {
-        val c = if (useReliable) df.checkpoint(eager = false)
-          else df.localCheckpoint(eager = false)
-        // row-count the internal RDD directly: ONE job (no AQE aggregate
-        // stage — a df.count() over the lazy checkpoint pays a second
-        // job for its exchange materialization, measured r17)
-        (c, c.queryExecution.toRdd.count())
-      }
     val codes = encoded.select(col("id").cast("long").as("nid"), col("codes"))
     val q = queries.select(col(idCol).cast("long").as("query_id"),
       col(vecCol).cast("array<double>").as("qv"))
@@ -169,7 +152,10 @@ object Ann {
     }
     val e0 = q.select(col("query_id"),
       explode(lit(entryIds.toArray)).as("nid"))
-    val (b0, n0) = cutCounted(topBeam(score(e0.unionByName(expandRaw(e0)))))
+    // the round-1 count doubles as the all-miss guard (same barrier diet
+    // as [[walkBeam]])
+    val first = topBeam(score(e0.unionByName(expandRaw(e0))))
+    val (b0, n0) = if (cutLineage) Lineage.cutCounted(first) else (first, -1L)
     val miss = if (n0 >= 0L) n0 == 0L else b0.isEmpty
     if (miss && !q.isEmpty)
       throw new IllegalArgumentException(
@@ -181,7 +167,7 @@ object Ann {
       val merged = topBeam(beam.unionByName(score(expand)))
       // the final beam feeds the exact re-rank exactly once — leave it
       // uncut so its work rides the caller's action
-      beam = if (h == hops) merged else cut(merged)
+      beam = if (h == hops || !cutLineage) merged else Lineage.cut(merged)
     }
     // IndexRefine stage: exact full-precision rescoring of the beam only
     // (post-filter semi-join first, when present — disallowed candidates
@@ -450,8 +436,8 @@ object Ann {
     * Scale shape: per round ONE keyed self-join (two-hop) + distinct +
     * two keyed joins against the vector table + one bounded top-k
     * aggregate — candidate volume O(n·k²) per round, never O(n²); every
-    * join is on the id key. Rounds are localCheckpoint-cut (the
-    * LinkGraph contract) so lineage stays one round deep.
+    * join is on the id key. Rounds are cut ([[Lineage]]) so lineage
+    * stays one round deep.
     * Output: (query_id, rank, neighbor_id, cos) — the k-NN graph.
     */
   /** CONSUMED-ONCE CONTRACT (r16 barrier diet): the returned frame's
@@ -501,9 +487,6 @@ object Ann {
       k: Int, iters: Int, randomInit: Boolean, delta: Option[Double],
       track: Boolean = false): (DataFrame, Seq[(Int, Long)]) = {
     require(k >= 1 && iters >= 1, s"bad k=$k iters=$iters")
-    val useReliable = emb.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint() else df.localCheckpoint()
     val vecs = emb.select(col(idCol).cast("long").as("vid"),
       col(vecCol).cast("array<double>").as("v"))
     val n = vecs.count()
@@ -527,7 +510,7 @@ object Ann {
       .agg(Fns.topKByScore(col("cos"), col("neighbor_id"), k).as("top"))
       .select(col("query_id").as("src"), explode(col("top")).as("t"))
       .select(col("src"), col("t.id").as("dst"))
-    var cur = cut(
+    var cur = Lineage.cut(
       vecs.select(col("vid").as("src"),
           explode(transform(sequence(lit(1), lit(k)), j => initDst(j))).as("dst"))
         .filter(col("src") =!= col("dst")))
@@ -553,7 +536,7 @@ object Ann {
       // both re-read the set), as must every non-final round (re-read
       // three ways by the next round's candidate closure)
       val isFinal = !counting && r == iters
-      val next = if (isFinal) topK(score(cand)) else cut(topK(score(cand)))
+      val next = if (isFinal) topK(score(cand)) else Lineage.cut(topK(score(cand)))
       if (counting) {
         val changed = next.join(cur, Seq("src", "dst"), "left_anti").count()
         telemetry += (r -> changed)
@@ -695,28 +678,11 @@ object Ann {
       cutFinal: Boolean = true): DataFrame = {
     require(hops >= 1, s"bad hops $hops")
     require(expandHops >= 1 && expandHops <= 3, s"bad expandHops $expandHops")
-    val useReliable =
-      corpus.sparkSession.sparkContext.getCheckpointDir.isDefined
     // cutLineage=false is the plan-lock seam: checkpoint cuts hide the
     // per-hop joins from the final executed plan, so Round13PlanSpec
     // disables them to assert the WHOLE walk is keyed-join + bounded
     // top-k. Production callers keep the default (re-executing an uncut
     // beam lineage is exponential in hops).
-    def cut(df: DataFrame): DataFrame =
-      if (!cutLineage) df
-      else if (useReliable) df.checkpoint() else df.localCheckpoint()
-    // lazy cut + count: ONE materializing job where eager-cut-then-isEmpty
-    // paid two sequential ones; the count doubles as the all-miss guard
-    def cutCounted(df: DataFrame): (DataFrame, Long) =
-      if (!cutLineage) (df, -1L)
-      else {
-        val c = if (useReliable) df.checkpoint(eager = false)
-          else df.localCheckpoint(eager = false)
-        // row-count the internal RDD directly: ONE job (no AQE aggregate
-        // stage — a df.count() over the lazy checkpoint pays a second
-        // job for its exchange materialization, measured r17)
-        (c, c.queryExecution.toRdd.count())
-      }
     val vecs = corpus.select(col(idCol).cast("long").as("nid"),
       col(vecCol).cast("array<double>").as("cv"))
     val q = queries.select(col(idCol).cast("long").as("query_id"),
@@ -769,7 +735,9 @@ object Ann {
         // expansion scored in a single job
         val e0 = entries.select(col("query_id").cast("long"),
           col("nid").cast("long"))
-        val (b0, n0) = cutCounted(topBeam(score(e0.unionByName(expandRaw(e0)))))
+        val first = topBeam(score(e0.unionByName(expandRaw(e0))))
+        val (b0, n0) =
+          if (cutLineage) Lineage.cutCounted(first) else (first, -1L)
         // loud all-miss guard: ids absent from the corpus vanish in the
         // scoring join, and a fully-missed entry set would walk to an
         // empty result that reads as "no neighbors" (zero queries is the
@@ -790,7 +758,8 @@ object Ann {
       // identical (cos, nid) pair and the distinct-id heap drops it
       val expand = expandRaw(beam.select(col("query_id"), col("nid")))
       val merged = topBeam(beam.unionByName(score(expand)))
-      beam = if (h == hops && !cutFinal) merged else cut(merged)
+      beam = if ((h == hops && !cutFinal) || !cutLineage) merged
+        else Lineage.cut(merged)
     }
     beam
   }
@@ -847,7 +816,7 @@ object Ann {
       val mem0 = vecs.filter(layerLevel(col("vid"), p, maxLevel) >= l)
       val members = Ranks.globalRowNumber(mem0, Seq("vid"),
         Ranks.quantileBucket(mem0, "vid", 256), "did")
-      val ids = members.select(col("did"), col("vid")).localCheckpoint()
+      val ids = Lineage.cut(members.select(col("did"), col("vid")))
       val knn = nnDescent(members.select(col("did"), col("v")),
         "did", "v", k, iters, randomInit)
       acc.unionByName(serveGraph(knn)
@@ -1060,9 +1029,8 @@ object Ann {
         // cut the batch's lineage once so the per-chunk filters re-read a
         // materialized table instead of recomputing upstream work nChunks
         // times; the batch is arrival-bounded, never corpus-scale
-        val keyed = batch
-          .withColumn("__chunk", pmod(xxhash64(col(idCol)), lit(nChunks)))
-          .localCheckpoint()
+        val keyed = Lineage.cut(batch
+          .withColumn("__chunk", pmod(xxhash64(col(idCol)), lit(nChunks))))
         val parts = (0 until nChunks).map { i =>
           // cutFinal=true (ADVICE r16): with the final round ALSO cut,
           // every lineage cut inside graphSearch executes eagerly, so
@@ -1079,7 +1047,7 @@ object Ann {
         // with cuts on, every chunk's walk has already executed (the cut
         // beams carry the data) — the batch blocks can go now; with cuts
         // off (plan-lock specs) the union is still lazy over `keyed`
-        if (cutLineage) keyed.unpersist()
+        if (cutLineage) Lineage.release(keyed)
         all
       }
     // one-pass symmetrization (ADVICE r16): emit both directions from a
@@ -1331,19 +1299,18 @@ object Ann {
     require(m >= 1, s"bad m $m")
     val vecs = corpus.select(col(idCol).cast("long").as("nid"),
       col(vecCol).cast("array<double>").as("v"))
-    val ranked = adj
+    // each selection round re-reads the ranking
+    val ranked = Lineage.cut(adj
       .select(col("src").cast("long"), col("dst").cast("long")).distinct()
       .join(vecs.select(col("nid").as("src"), col("v").as("qv")), "src")
       .join(vecs.select(col("nid").as("dst"), col("v").as("cv")), "dst")
       .select(col("src"), col("dst"), col("cv"),
         Fns.cosineSim(col("qv"), col("cv")).as("cosq"))
       .withColumn("rk", row_number().over(
-        Window.partitionBy("src").orderBy(col("cosq").desc, col("dst"))))
-      .localCheckpoint() // each selection round re-reads the ranking
-    var sel = ranked.filter(col("rk") === 1)
+        Window.partitionBy("src").orderBy(col("cosq").desc, col("dst")))))
+    var sel = Lineage.cut(ranked.filter(col("rk") === 1)
       .select(col("src"), col("dst").as("sid"), col("cv").as("sv"),
-        col("rk").as("srk"))
-      .localCheckpoint()
+        col("rk").as("srk")))
     for (round <- 2 to m) {
       // pass = candidate closer to the node than to EVERY selected
       // neighbor (cos to node > cos to each selected — the cosine
@@ -1365,7 +1332,7 @@ object Ann {
       // intermediate rounds re-read `sel` (twice per round) — cut; the
       // FINAL round's selection is consumed exactly once by the caller's
       // action, so its checkpoint job is pure overhead (guide §2.4)
-      sel = if (round == m) merged else merged.localCheckpoint()
+      sel = if (round == m) merged else Lineage.cut(merged)
     }
     sel.select(col("src"), col("sid").as("dst"))
   }

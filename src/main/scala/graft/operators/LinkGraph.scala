@@ -19,43 +19,15 @@ import org.apache.spark.sql.functions._
   * hash-partitioned by `src` ONCE and checkpoint-materialized; each
   * iteration is one co-located join on that partitioning plus one keyed
   * aggregation on `dst` — two exchanges per round on rank-sized rows
-  * only, never on the corpus. Iterations are lineage-cut (reliable
-  * checkpoint when a checkpoint dir is set, localCheckpoint otherwise)
-  * and each round's predecessor blocks are freed, the
-  * [[IdentityResolution.connectedComponents]] contract. Small graphs
+  * only, never on the corpus. Iterations are cut and each round's
+  * predecessor blocks freed ([[Lineage]]). Small graphs
   * (≤ `smallGraphMaxEdges`) take a driver power-iteration fast path with
   * the IDENTICAL integer arithmetic — the size-adaptive CC precedent:
   * at host-graph sizes that fit one task, O(iters) shuffle rounds are
   * pure fixed job overhead.
   */
 object LinkGraph {
-
-  /** Above this edge count the distributed iteration runs; below it the
-    * driver fast path does (bounded collect — the edge list, not the
-    * corpus).
-    */
-  val SmallGraphMaxEdges: Long = 1000000L
-
-  /** Materialize an intermediate once so every downstream reference reads
-    * its blocks instead of re-running the producing subtree (Catalyst has
-    * no common-subexpression reuse across separate DataFrame references —
-    * without the cut, each reference re-executes the whole subtree).
-    * Reliable checkpoint when a checkpoint dir is configured (the cluster
-    * path), executor-local otherwise.
-    */
-  private def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
-  /** Free a superseded local checkpoint's blocks (no-op on reliable
-    * checkpoints — those are files). Only call on frames the returned
-    * result no longer depends on.
-    */
-  private def releaseBlocks(df: DataFrame): Unit =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isEmpty)
-      df.queryExecution.logical.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
+  import Lineage.{cut, cutCounted, release}
 
   /** PageRank over `edges(srcCol, dstCol)` (any integral node id type;
     * duplicate edges collapse). Returns (node BIGINT, rank BIGINT) with
@@ -64,22 +36,13 @@ object LinkGraph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, scale: Long = 1000000000000L,
       dampNum: Long = 85, dampDen: Long = 100,
-      smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
+      smallGraphMaxEdges: Long = Lineage.DriverTierMaxEdges): DataFrame = {
     require(iters >= 1 && iters <= 100, s"pageRank: iters must be 1..100, got $iters")
     require(scale >= 1000L, s"pageRank: scale too small for fixed-point ($scale)")
     require(dampDen > 0 && dampNum >= 0 && dampNum <= dampDen,
       s"pageRank: damping $dampNum/$dampDen is not in [0, 1]")
 
     val spark = edges.sparkSession
-    val useReliable = spark.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint() else df.localCheckpoint()
-    def releaseBlocks(df: DataFrame): Unit =
-      if (!useReliable)
-        df.queryExecution.logical.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.foreach(_.unpersist(blocking = false))
-
     val e = cut(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst")).distinct())
     val ne = e.count() // reads the just-materialized blocks, no recompute
@@ -87,7 +50,7 @@ object LinkGraph {
 
     if (ne <= smallGraphMaxEdges) {
       val result = smallGraphPageRank(spark, e, iters, scale, dampNum, dampDen)
-      releaseBlocks(e)
+      release(e)
       return result
     }
 
@@ -96,7 +59,7 @@ object LinkGraph {
     val ec = cut(e.join(od, "src").repartition(col("src")))
     val nodes = cut(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
-    releaseBlocks(e)
+    release(e)
     val n = nodes.count()
     val r0 = scale / n
     val base = r0 * (dampDen - dampNum) / dampDen
@@ -112,12 +75,12 @@ object LinkGraph {
           coalesce(col("mass"), lit(0L)).as("mass"))
         .select(col("node"),
           (lit(base) + expr(s"($dampNum * mass) div $dampDen")).as("rank")))
-      releaseBlocks(ranks)
+      release(ranks)
       ranks = next
       i += 1
     }
-    releaseBlocks(ec)
-    releaseBlocks(nodes)
+    release(ec)
+    release(nodes)
     // the returned frame is backed by the final round's checkpoint blocks
     ranks
   }
@@ -200,12 +163,12 @@ object LinkGraph {
       val aNext = cut(normalize(
         e.join(h.select(col("node").as("src"), col("h").as("hv")), "src")
           .groupBy(col("dst").as("node")).agg(sum("hv").as("raw")), "a"))
-      if (i > 0) releaseBlocks(a)
+      if (i > 0) release(a)
       a = aNext
       val hNext = cut(normalize(
         e.join(a.select(col("node").as("dst"), col("a").as("av")), "dst")
           .groupBy(col("src").as("node")).agg(sum("av").as("raw")), "h"))
-      if (i > 0) releaseBlocks(h)
+      if (i > 0) release(h)
       h = hNext
       i += 1
     }
@@ -249,7 +212,7 @@ object LinkGraph {
         .filter(col("rn") === 1).select(col("node"), col("label"))
       val next = cut(nodes.join(pick, Seq("node"), "left")
         .select(col("node"), coalesce(col("label"), col("node")).as("label")))
-      if (i > 0) releaseBlocks(labels)
+      if (i > 0) release(labels)
       labels = next
       i += 1
     }
@@ -319,8 +282,8 @@ object LinkGraph {
     *
     * Each round is one keyed degree aggregate plus two semi-joins of the
     * edge list against the ≥k node set — linear in surviving edges, no
-    * per-node driver loop; rounds are checkpoint-cut so the lineage stays
-    * O(1) deep (the [[pageRank]] contract).
+    * per-node driver loop; rounds are cut ([[Lineage]]) so the lineage
+    * stays O(1) deep.
     *
     * Returns (node, degree) for nodes surviving all rounds.
     */
@@ -345,7 +308,7 @@ object LinkGraph {
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
         .select("a", "b"))
-      releaseBlocks(und)
+      release(und)
       und = next
       i += 1
     }
@@ -381,7 +344,7 @@ object LinkGraph {
       seeds.select(col(seedCol).cast("long").as("node")).distinct()
         .withColumn("__s", lit(1L)), Seq("node"), "left")
       .select(col("node"), coalesce(col("__s"), lit(0L)).as("seed")))
-    releaseBlocks(e)
+    release(e)
     val nSeeds = flags.filter(col("seed") === 1L).count()
     require(nSeeds > 0, "ppr: no seed appears in the graph")
     val r0 = scale / nSeeds
@@ -397,12 +360,12 @@ object LinkGraph {
         .select(col("node"),
           (col("seed") * lit(base) +
             expr(s"($dampNum * coalesce(mass, 0L)) div $dampDen")).as("rank")))
-      releaseBlocks(ranks)
+      release(ranks)
       ranks = next
       i += 1
     }
-    releaseBlocks(ec)
-    releaseBlocks(flags)
+    release(ec)
+    release(flags)
     ranks
   }
 
@@ -418,25 +381,20 @@ object LinkGraph {
     */
   def shortestPaths(edges: DataFrame, srcCol: String, dstCol: String,
       weightCol: String, seeds: DataFrame, seedCol: String,
-      rounds: Int, smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
+      rounds: Int,
+      smallGraphMaxEdges: Long = Lineage.DriverTierMaxEdges): DataFrame = {
     require(rounds >= 1 && rounds <= 50,
       s"shortestPaths: rounds must be 1..50, got $rounds")
-    // lazy cut + count (VERDICT r16 #3/#4 pattern): the size-gate /
-    // early-exit counts ride each frame's own materializing job instead
-    // of paying a separate probe job
-    def cutCounted(df: DataFrame): (DataFrame, Long) = {
-      val c = if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-      // one job: internal-RDD count, no AQE aggregate stage (measured r17)
-      (c, c.queryExecution.toRdd.count())
-    }
     val (e, ne) = cutCounted(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
       .filter(col("src") =!= col("dst") && col("w") >= 0L)
       .groupBy("src", "dst").agg(min("w").as("w")))
+    // a null seed reaches nothing; dropping it keeps the driver tier and
+    // the loop on the same seed set
     val (dist0, nSeeds) = cutCounted(
-      seeds.select(col(seedCol).cast("long").as("node")).distinct()
+      seeds.select(col(seedCol).cast("long").as("node"))
+        .filter(col("node").isNotNull).distinct()
         .withColumn("dist", lit(0L)))
     // Size-adaptive driver tier (the [[pageRank]]/CC precedent): when the
     // deduped edge list + seed set are bounded driver state, the whole
@@ -446,8 +404,8 @@ object LinkGraph {
     // bit-equal to the distributed loop's.
     if (ne + nSeeds <= smallGraphMaxEdges) {
       val result = smallGraphShortestPaths(e, dist0, rounds)
-      releaseBlocks(e)
-      releaseBlocks(dist0)
+      release(e)
+      release(dist0)
       return result
     }
     var dist = dist0
@@ -460,21 +418,21 @@ object LinkGraph {
         .select(col("dst").as("node"), (col("dist") + col("w")).as("cand"))
         .groupBy("node").agg(min("cand").as("cand"))
       val joined = relaxed.join(dist, Seq("node"), "left")
-      // early exit (VERDICT r16 #4): an empty improved frontier closes
-      // the wavefront — every later round relaxes nothing and dist is
-      // already the fixed point, so the remaining rounds are free
+      // early exit: an empty improved frontier closes the wavefront —
+      // every later round relaxes nothing and dist is already the fixed
+      // point, so the remaining rounds are free
       val (improved, nImp) = cutCounted(joined.filter(col("dist").isNull ||
           col("cand") < col("dist"))
         .select(col("node"), col("cand").as("dist")))
       if (nImp == 0L) {
-        releaseBlocks(improved)
+        release(improved)
         open = false
       } else {
         val nextDist = cut(dist.join(improved.select(col("node")), Seq("node"),
             "left_anti")
           .unionByName(improved))
-        releaseBlocks(dist)
-        if (i > 0) releaseBlocks(frontier)
+        release(dist)
+        if (i > 0) release(frontier)
         dist = nextDist
         frontier = improved
       }
@@ -485,7 +443,7 @@ object LinkGraph {
 
   /** Driver synchronous Bellman–Ford — identical per-round min-merge to
     * the distributed loop (closed frontier, exact longs), for graphs
-    * whose edge list fits one task. Gate: [[SmallGraphMaxEdges]].
+    * whose edge list fits one task. Gate: [[Lineage.DriverTierMaxEdges]].
     */
   private def smallGraphShortestPaths(e: DataFrame, dist0: DataFrame,
       rounds: Int): DataFrame = {
@@ -530,26 +488,21 @@ object LinkGraph {
     */
   def bfsDistance(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, rounds: Int,
-      smallGraphMaxEdges: Long = SmallGraphMaxEdges): DataFrame = {
+      smallGraphMaxEdges: Long = Lineage.DriverTierMaxEdges): DataFrame = {
     require(rounds >= 1 && rounds <= 50,
       s"bfsDistance: rounds must be 1..50, got $rounds")
-    def cutCounted(df: DataFrame): (DataFrame, Long) = {
-      val c = if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-      // one job: internal-RDD count, no AQE aggregate stage (measured r17)
-      (c, c.queryExecution.toRdd.count())
-    }
     val (e, ne) = cutCounted(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct())
     val (dist0, nSeeds) = cutCounted(
-      seeds.select(col(seedCol).cast("long").as("node")).distinct()
+      seeds.select(col(seedCol).cast("long").as("node"))
+        .filter(col("node").isNotNull).distinct()
         .withColumn("dist", lit(0L)))
     // size-adaptive driver tier + early exit — see [[shortestPaths]]
     if (ne + nSeeds <= smallGraphMaxEdges) {
       val result = smallGraphBfs(e, dist0, rounds)
-      releaseBlocks(e)
-      releaseBlocks(dist0)
+      release(e)
+      release(dist0)
       return result
     }
     var dist = dist0
@@ -566,12 +519,12 @@ object LinkGraph {
       val (fresh, nFresh) =
         cutCounted(reached.join(dist.select("node"), Seq("node"), "left_anti"))
       if (nFresh == 0L) {
-        releaseBlocks(fresh)
+        release(fresh)
         open = false
       } else {
         val nextDist = cut(dist.unionByName(fresh))
-        releaseBlocks(dist)
-        if (i > 0) releaseBlocks(frontier)
+        release(dist)
+        if (i > 0) release(frontier)
         dist = nextDist
         frontier = fresh
       }

@@ -490,8 +490,7 @@ object Sampling {
     val rawCnt = hashedNgramCounts(raw, idCol, textCol, buckets)
     // bucket totals are `buckets` rows — checkpoint-cut so the corpus
     // pass behind them executes once, not once per domain's ratio table
-    val rawTot = rawCnt.groupBy("b").agg(sum("cnt").as("rc"))
-      .localCheckpoint()
+    val rawTot = Lineage.cut(rawCnt.groupBy("b").agg(sum("cnt").as("rc")))
     val ratios = targets.map { case (name, target) =>
       val tgtTot = hashedNgramCounts(target, idCol, textCol, buckets)
         .groupBy("b").agg(sum("cnt").as("tc"))

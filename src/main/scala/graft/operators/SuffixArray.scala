@@ -125,15 +125,8 @@ object SuffixArray {
       initWidth: Int = 256, buckets: Int = 256,
       wideCap: Int = 1024): DataFrame = {
     require(initWidth >= 4, s"initWidth must be >= 4, got $initWidth")
+    import Lineage.{cut, release}
     val spark = docs.sparkSession
-    val useReliable = spark.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint() else df.localCheckpoint()
-    def releaseBlocks(df: DataFrame): Unit =
-      if (!useReliable)
-        df.queryExecution.logical.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-        }.foreach(_.unpersist(blocking = false))
 
     val base = graft.Tables.ensureMinParallelism(
       docs.filter(col(idCol).isNotNull && length(col(textCol)) > 0))
@@ -217,8 +210,8 @@ object SuffixArray {
           maxBuckets = buckets + 1)
         val next = cut(ranked.select(col("doc"), col("pos"),
           col("__nr").as("r")))
-        releaseBlocks(prev)
-        releaseBlocks(g)
+        release(prev)
+        release(g)
         prev = next
         cur = next
       }

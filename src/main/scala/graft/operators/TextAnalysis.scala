@@ -623,11 +623,9 @@ object TextAnalysis {
     val (w, feat) = perceptronFit(docs, idCol, textCol, label, dim, epochs,
       biasScale)
     // the weight relation doesn't reference the feature table — free its
-    // checkpoint blocks (the CC-loop leak contract); perceptronScore's
-    // result IS backed by them, so only the train path releases
-    feat.queryExecution.logical.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+    // blocks; perceptronScore's result IS backed by them, so only the
+    // train path releases
+    Lineage.release(feat)
     val spark = docs.sparkSession
     import spark.implicits._
     w.zipWithIndex.map { case (wt, j) => (j.toLong, wt) }
@@ -673,7 +671,7 @@ object TextAnalysis {
     val biasFeat = docs.filter(col(idCol).isNotNull)
       .select(col(idCol).as("doc"), label.cast("long").as("y"),
         lit(dim.toLong).as("j"), lit(biasScale.toLong).as("x"))
-    val feat = tokFeat.unionByName(biasFeat).localCheckpoint()
+    val feat = Lineage.cut(tokFeat.unionByName(biasFeat))
     val w = Array.fill(dim + 1)(0L)
     var pocket = w.clone()
     var bestErr = Long.MaxValue

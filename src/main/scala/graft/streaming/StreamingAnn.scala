@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.operators.Ann
+import graft.operators.{Ann, Lineage}
 
 /** Streaming ANN ingest — the embeddings counterpart of the incremental
   * near-dup gate's serve shape (VERDICT r12 #6): new vectors arriving on
@@ -175,14 +175,10 @@ object StreamingAnn {
     reader.json(stagingDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // lazy checkpoint + count: one materializing job doubles as the
-        // emptiness probe, and the count feeds the walk's chunking
-        // decision (knownCount) — was 3 sequential jobs (eager
-        // checkpoint, isEmpty, count) per micro-batch
-        val b = batch.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-          .localCheckpoint(eager = false)
-        val nB = b.count()
+        // one materializing job doubles as the emptiness probe, and the
+        // count feeds the walk's chunking decision (knownCount)
+        val (b, nB) = Lineage.cutCounted(batch.select(col("vec_id"),
+          col("embedding").cast("array<double>").as("embedding")))
         if (nB > 0L) {
           // replay-erase BEFORE reading the index: a crashed attempt's
           // partial appends must not be visible to the recomputed walk
@@ -190,10 +186,10 @@ object StreamingAnn {
           cleanupBatchFiles(spark, corpusDir, batchId, "corpus")
           val adj = spark.read.parquet(adjDir)
           val corpus = spark.read.parquet(corpusDir)
-          val edges = Ann.graphInsertEdges(adj, corpus, b,
+          // materialize BEFORE appending to adjDir
+          val edges = Lineage.cut(Ann.graphInsertEdges(adj, corpus, b,
               "vec_id", "embedding", kLink, entryIds, beamWidth, hops,
-              expandHops, knownCount = Some(nB))
-            .localCheckpoint() // materialize BEFORE appending to adjDir
+              expandHops, knownCount = Some(nB)))
           idempotentAppend(edges, adjDir, batchId, "edges")
           idempotentAppend(b, corpusDir, batchId, "corpus")
         }
@@ -223,19 +219,18 @@ object StreamingAnn {
     reader.json(stagingDir)
       .writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // same probe merge as the flat maintainer: one job, not three
-        val b = batch.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("embedding"))
-          .localCheckpoint(eager = false)
-        if (b.count() > 0L) {
+        // same probe merge as the flat maintainer
+        val (b, nB) = Lineage.cutCounted(batch.select(col("vec_id"),
+          col("embedding").cast("array<double>").as("embedding")))
+        if (nB > 0L) {
           cleanupBatchFiles(spark, layersDir, batchId, "edges")
           cleanupBatchFiles(spark, corpusDir, batchId, "corpus")
           val layers = spark.read.parquet(layersDir)
           val corpus = spark.read.parquet(corpusDir)
-          val edges = Ann.layeredInsertEdges(layers, corpus, b,
+          // materialize BEFORE appending to layersDir
+          val edges = Lineage.cut(Ann.layeredInsertEdges(layers, corpus, b,
               "vec_id", "embedding", maxLevel, p, kLink, beamWidth, hops,
-              expandHops)
-            .localCheckpoint() // materialize BEFORE appending to layersDir
+              expandHops))
           idempotentAppend(edges, layersDir, batchId, "edges",
             partitionCols = Seq("layer"))
           idempotentAppend(b, corpusDir, batchId, "corpus")

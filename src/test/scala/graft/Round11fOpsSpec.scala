@@ -336,5 +336,20 @@ class Round11fOpsSpec extends SparkSpec {
       bfsEdges, "src", "dst", iso, "node", rounds = 3,
       smallGraphMaxEdges = 0L))
     assert(iA === iB && iA(99L) === 0L)
+    // a null seed reaches nothing: both tiers drop it and agree with the
+    // non-null seed set (the driver tier used to throw on it)
+    val withNull = Seq(Some(0L), None).toDF("node")
+    val nA = toMap(LinkGraph.shortestPaths(
+      edges, "src", "dst", "w", withNull, "node", rounds = 12))
+    val nB = toMap(LinkGraph.shortestPaths(
+      edges, "src", "dst", "w", withNull, "node", rounds = 12,
+      smallGraphMaxEdges = 0L))
+    assert(nA === nB && nA === viaDriver)
+    val nbA = toMap(LinkGraph.bfsDistance(
+      bfsEdges, "src", "dst", withNull, "node", rounds = 12))
+    val nbB = toMap(LinkGraph.bfsDistance(
+      bfsEdges, "src", "dst", withNull, "node", rounds = 12,
+      smallGraphMaxEdges = 0L))
+    assert(nbA === nbB && nbA === bA)
   }
 }
