@@ -134,7 +134,7 @@ object Pipeline {
             s"count reconciliation broken: transformed=$transformed loaded=${report.records}")
         val profileReport = out.profiles.map { p =>
           Sinks.write(Sinks.shapeMixpanelProfiles(p, opts.getOrElse("token", "")),
-            Sinks.mixpanelEngageConfig(opts.getOrElse("token", "")), transport)
+            Sinks.mixpanelEngageConfig(Sinks.region(opts)), transport)
         }
         val mergeReport = out.mergePairs.map { m =>
           Sinks.write(Sinks.shapeMixpanelMerges(m), cfg, transport)

@@ -68,14 +68,17 @@ object BatchedHttpSink {
     bos.toByteArray
   }
 
-  /** Simple token bucket: capacity = rate, refill continuous. */
+  /** Simple token bucket: capacity = max(rate, 1) so a sub-1/s rate can
+    * still hold the one token a POST needs; refill continuous.
+    */
   private final class TokenBucket(ratePerSecond: Double) {
-    private var tokens = math.max(ratePerSecond, 1.0)
+    private val capacity = math.max(ratePerSecond, 1.0)
+    private var tokens = capacity
     private var last = System.nanoTime()
     def acquire(): Unit = if (ratePerSecond > 0) synchronized {
       while ({
         val now = System.nanoTime()
-        tokens = math.min(ratePerSecond,
+        tokens = math.min(capacity,
           tokens + (now - last) * 1e-9 * ratePerSecond)
         last = now
         tokens < 1.0
@@ -84,9 +87,8 @@ object BatchedHttpSink {
     }
   }
 
-  /** Per-task batching core: count+byte-capped accumulation, gzip, retry,
-    * rate limit. Shared by the foreachPartition writer and the DSv2
-    * DataWriter (`graft.sinks.v2.HttpImportSink`).
+  /** Per-task batching core of [[writeJson]]: count+byte-capped
+    * accumulation, gzip, retry, rate limit.
     */
   final class PartitionBatcher(cfg: SinkConfig, transport: Transport,
       onBatch: (Int, HttpResponseLite, Boolean) => Unit) {

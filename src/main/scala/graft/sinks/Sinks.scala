@@ -36,8 +36,10 @@ object Sinks {
         col("properties")
       ).as("properties"))).as("json"))
 
-  /** Mixpanel /engage (K5): profiles → {$token, $distinct_id, $ip, $set}. */
-  def mixpanelEngageConfig(token: String, region: Region = US): SinkConfig =
+  /** Mixpanel /engage (K5): profiles → {$token, $distinct_id, $ip, $set};
+    * the token rides in each record ([[shapeMixpanelProfiles]]).
+    */
+  def mixpanelEngageConfig(region: Region = US): SinkConfig =
     SinkConfig(
       url = region.host("https://api.mixpanel.com", "https://api-eu.mixpanel.com") +
         "/engage?verbose=1",
@@ -72,12 +74,15 @@ object Sinks {
   def woopraConfig(host: String): SinkConfig =
     SinkConfig(url = host, maxRecordsPerBatch = 10000, ratePerSecond = 0.5)
 
+  /** Region from sink options: `"region" -> "EU"`, else US. */
+  private[graft] def region(opts: Map[String, String]): Region =
+    if (opts.get("region").contains("EU")) EU else US
+
   /** K8: vendor dispatch. */
   def forVendor(vendor: String, opts: Map[String, String]): SinkConfig =
     vendor.toLowerCase match {
       case "mixpanel" => mixpanelImportConfig(
-        opts.getOrElse("project_id", ""), opts.getOrElse("auth", ""),
-        if (opts.get("region").contains("EU")) EU else US)
+        opts.getOrElse("project_id", ""), opts.getOrElse("auth", ""), region(opts))
       case "amplitude" => amplitudeConfig(opts.getOrElse("api_key", ""))
       case "woopra" => woopraConfig(opts.getOrElse("host", "https://www.woopra.com/track/ce"))
       case other => throw new IllegalArgumentException(s"unknown sink vendor: $other")

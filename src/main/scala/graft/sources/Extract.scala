@@ -17,7 +17,8 @@ import java.time.{Duration, LocalDateTime}
   * this zero-egress environment use fakes. ZIP bodies (S4 — the real
   * Amplitude /export shape) are sniffed and unzipped driver-side to
   * staging; gzipped members stage as-is because Spark's codec chain (S6)
-  * reads .gz transparently.
+  * reads .gz transparently. The /engage profile walk (S10) is serial by
+  * protocol and stages its own pages in [[mixpanelEngage]].
   */
 object Extract {
 
@@ -36,8 +37,7 @@ object Extract {
     * cursor advances only after a page is successfully returned). A
     * `None` body ("no data", e.g. a 404 export hour) is a terminal
     * answer, never retried; after `maxAttempts` failures the last
-    * exception propagates so Spark's task retry (the outer, whole-slice
-    * level of the retry story) can take over.
+    * exception propagates and the extract fails loudly.
     *
     * `retryable` decides WHICH failures are worth another attempt. The
     * default matches transient shapes by message/type (timeouts, 5xx,
@@ -187,14 +187,57 @@ object Extract {
     }.toSeq
   }
 
-  /** Mixpanel /engage (S10): serial session_id/page pagination (pages are
-    * cursor-chained — SURVEY §7.4.5) via [[Sources.paginatedToStaging]].
+  /** Mixpanel /engage (S10): the reference's serial cursor walk
+    * (mixpanelETL.js:110-182; pages are cursor-chained — SURVEY §7.4.5).
+    * The first request carries no cursor; the response's `session_id` is
+    * captured once and threaded, with the next `page`, into every later
+    * request. The walk stops on a page shorter than the server-reported
+    * `page_size`, or on a `None` body. Each page's `results` array stages
+    * one profile per line as `page_NNNNN.json`, which the cluster reads
+    * back with `Model.engageSchema`. `include_all_users=false` is the
+    * reference's fixed flag (SURVEY F8). Returns the staged file paths.
     */
   def mixpanelEngage(baseUrl: String, stagingDir: String, fetcher: Fetcher,
-      pageSize: Int = 1000): Seq[String] =
-    Sources.paginatedToStaging(
-      page => fetcher.get(s"$baseUrl/api/2.0/engage?page=$page&page_size=$pageSize")
-        .map(b => new String(b, "UTF-8").linesIterator.toSeq)
-        .filter(_.nonEmpty),
-      stagingDir)
+      pageSize: Int = 1000): Seq[String] = {
+    val dir = Paths.get(stagingDir)
+    Files.createDirectories(dir)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val staged = scala.collection.mutable.ArrayBuffer[String]()
+    var page = 0
+    var sessionId: Option[String] = None
+    // Termination compares against the SERVER-reported page_size
+    // (captured from the first response, like the reference's
+    // lastPageSize). Mixpanel caps page_size at 1000: comparing against a
+    // larger client-requested value would see every page as "short" and
+    // silently truncate the walk to one page.
+    var serverPageSize: Option[Int] = None
+    var lastCount = Int.MaxValue
+    var exhausted = false
+    while (!exhausted && serverPageSize.forall(lastCount >= _)) {
+      val cursor = sessionId.map(s => s"&session_id=$s&page=$page").getOrElse("")
+      fetcher.get(s"$baseUrl/api/2.0/engage?page_size=$pageSize" +
+          s"&include_all_users=false$cursor") match {
+        case None => exhausted = true
+        case Some(body) =>
+          val root = mapper.readTree(new String(body, "UTF-8"))
+          val results = Option(root.get("results"))
+            .map(r => (0 until r.size()).map(i => mapper.writeValueAsString(r.get(i))))
+            .getOrElse(Seq.empty)
+          // capture-once (reference protocol): a mid-walk response
+          // missing session_id must NOT reset the cursor — that would
+          // restart the stream (duplicates, potential non-termination)
+          sessionId = sessionId.orElse(Option(root.get("session_id")).map(_.asText()))
+          serverPageSize = serverPageSize.orElse(
+            Option(root.get("page_size")).map(_.asInt())).orElse(Some(pageSize))
+          page = Option(root.get("page")).map(_.asInt()).getOrElse(page) + 1
+          lastCount = results.size
+          if (results.nonEmpty) {
+            val f = dir.resolve(f"page_${staged.size}%05d.json")
+            Files.write(f, results.mkString("\n").getBytes("UTF-8"))
+            staged += f.toString
+          }
+      }
+    }
+    staged.toList
+  }
 }

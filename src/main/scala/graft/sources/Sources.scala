@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.StructType
   * Spark's distributed readers: `.gz` is transparent, directories are
   * scanned natively, malformed rows are PERMISSIVE-collected instead of
   * crashing a single-process loop. HTTP extracts stage to NDJSON first
-  * (driver-side fetch, S9-S10), then read distributed.
+  * (driver-side fetch in [[Extract]], S3/S9/S10), then read distributed.
   */
 object Sources {
 
@@ -167,26 +167,4 @@ object Sources {
       "fs.gs.project.id" -> projectId
     ) ++ serviceAccountKeyFile.map(k =>
       "google.cloud.auth.service.account.json.keyfile" -> k)
-
-  /** S10: paginated HTTP source, generalized. Pagination is inherently
-    * serial (page N's cursor comes from page N-1 — SURVEY §7.4.5), so the
-    * driver walks pages to NDJSON staging, then the cluster reads the
-    * staged files in parallel. `fetch(page)` returns the page's records as
-    * JSON lines, or None when exhausted.
-    */
-  def paginatedToStaging(
-      fetch: Int => Option[Seq[String]],
-      stagingDir: String,
-      maxPages: Int = 10000): Seq[String] = {
-    val dir = java.nio.file.Paths.get(stagingDir)
-    java.nio.file.Files.createDirectories(dir)
-    Iterator.from(0).take(maxPages)
-      .map(p => p -> fetch(p))
-      .takeWhile(_._2.isDefined)
-      .map { case (p, Some(lines)) =>
-        val f = dir.resolve(f"page_$p%05d.json")
-        java.nio.file.Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
-        f.toString
-      }.toList
-  }
 }

@@ -181,6 +181,26 @@ class EtlPipelineSpec extends SparkSpec {
     assert(report.sink.exists(_.failedBatches == 0))
   }
 
+  test("EU config sends events and profiles to the EU endpoint") {
+    val dir = tmpDir("mp-eu")
+    writeLines(dir, "export.json", Seq(
+      """{"event":"click","distinct_id":"u1","time":1700000000,"insert_id":"a","source":"mp","properties":{}}"""))
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir-engage"))
+    writeLines(s"$dir-engage", "engage.json", Seq(
+      """{"$distinct_id":"u1","$properties":{"plan":"pro"}}"""))
+    RecordingTransport.urls.clear()
+    RecordingTransport.failFirstN.set(0)
+    val cfg = ConfigParser.parse(
+      s"""{"source": {"name": "mixpanel", "options": {"path": "$dir", "doPeople": true}},
+         | "destination": {"name": "mixpanel", "project_id": "1", "token": "t",
+         |   "options": {"is EU?": true}}}""".stripMargin, new RecordingTransport)
+    val report = Pipeline.run(spark, cfg)
+    assert(report.events == 1 && report.profiles == 1)
+    val sent = RecordingTransport.urls.toArray.map(_.toString).toSeq
+    assert(sent.exists(_.contains("/import")) && sent.exists(_.contains("/engage")), sent)
+    assert(sent.forall(_.startsWith("https://api-eu.mixpanel.com/")), sent)
+  }
+
   test("reverse sink routing: amplitude destination gets amplitude wire format") {
     val dir = tmpDir("mp-to-amp")
     writeLines(dir, "export.json", Seq(

@@ -8,11 +8,13 @@ import graft.sinks.BatchedHttpSink.{HttpResponseLite, SinkConfig, Transport}
 object RecordingTransport {
   // static so executor threads (same JVM in local mode) share it
   val bodies = new ConcurrentLinkedQueue[Array[Byte]]()
+  val urls = new ConcurrentLinkedQueue[String]()
   val failFirstN = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
 class RecordingTransport extends Transport {
   def post(url: String, body: Array[Byte], headers: Map[String, String]): HttpResponseLite = {
+    RecordingTransport.urls.add(url)
     if (RecordingTransport.failFirstN.getAndDecrement() > 0)
       HttpResponseLite(503, "unavailable")
     else {
@@ -80,6 +82,28 @@ class SinkSpec extends SparkSpec {
     val report2 = BatchedHttpSink.writeJson(df, cfg, new RecordingTransport)
     assert(report2.failedBatches == 1 && report2.records == 0)
     assert(report2.responses.exists(_._1 == 503))
+  }
+
+  test("a rate below 1/s still posts, one batch per 1/rate seconds") {
+    // Woopra's preset is 0.5/s: the bucket must still hold the one token
+    // a POST needs, or no batch is ever sent
+    val starts = new ConcurrentLinkedQueue[java.lang.Long]()
+    val transport = new Transport {
+      def post(url: String, body: Array[Byte], headers: Map[String, String]): HttpResponseLite = {
+        starts.add(System.nanoTime()); HttpResponseLite(200, "ok")
+      }
+    }
+    val cfg = SinkConfig(url = "http://t", maxRecordsPerBatch = 1, gzipBody = false,
+      maxRetries = 0, ratePerSecond = 0.5)
+    val sent = new java.util.concurrent.atomic.AtomicInteger(0)
+    val batcher = new BatchedHttpSink.PartitionBatcher(cfg, transport,
+      (n, _, ok) => if (ok) sent.addAndGet(n))
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val run = scala.concurrent.Future { batcher.add("{}"); batcher.add("{}"); batcher.flush() }
+    scala.concurrent.Await.result(run, scala.concurrent.duration.Duration(8, "s"))
+    assert(sent.get() == 2)
+    val Array(t1, t2) = starts.toArray(Array.empty[java.lang.Long]).map(_.longValue)
+    assert(t2 - t1 >= 1900L * 1000 * 1000, s"second POST after ${(t2 - t1) / 1e6} ms")
   }
 
   test("mixpanel event shaping produces wire-format records") {
